@@ -17,12 +17,19 @@ micro per node per iteration — irrelevant for ranking, priceless for
 verification.
 
 Scale notes (100 TB / 10^10 nodes):
-- the edge list is built once, persisted, and reused across iterations;
-  each iteration is two shuffles (edges-by-src join, contribs-by-dst
-  agg) — the canonical Pregel-as-DataFrame shape. At cluster scale,
-  bucket BOTH edges (by src) and ranks (by node) on the same key count
-  to make the join exchange-free; the agg shuffle is O(nodes), not
+- the edge list is built once and reused across iterations; each
+  iteration is two shuffles (edges-by-src join, contribs-by-dst agg) —
+  the canonical Pregel-as-DataFrame shape. At cluster scale, bucket
+  BOTH edges (by src) and ranks (by node) on the same key count to
+  make the join exchange-free; the agg shuffle is O(nodes), not
   O(edges), because contributions partial-aggregate map-side.
+- :func:`pagerank_weighted` holds its loop-invariant frames as lazy
+  local checkpoints, so each iteration re-plans a few KB of plan, not
+  the caller's upstream (about 2 MB of html-extraction plan behind the
+  host graph); the price is that losing an executor fails the job
+  instead of recomputing. ``pagerank_micro``, ``hits_micro`` and
+  ``bfs_depth`` still persist their frames (``_pin``; release with
+  :func:`release`).
 - int64 headroom: total rank mass is N * 10^6 micro ≈ 10^16 at N=10^10;
   a universal hub absorbing all of it stays < 2^63 through the
   ``damping_pct *`` step (8.5e17).
@@ -378,16 +385,32 @@ def pagerank_weighted(
 
     Plan per iteration: ONE equi-join (edges+degree ⋈ ranks on src) +
     partial-agg SUM by dst + LEFT join back to nodes — identical shape
-    to ``pagerank_micro``; the degree join happens ONCE up front and
-    the weighted edge frame is persisted across iterations.
+    to ``pagerank_micro``; the degree join happens ONCE up front.
+
+    Loop-invariant state is plan-truncated, not cached: the edge
+    projection, the weighted edge frame and the node set are each held
+    as a lazy ``localCheckpoint(eager=False)`` (the
+    ``dedup.connected_components`` idiom). The caller's upstream
+    (extraction, contraction, ...) then runs once, and every
+    iteration's analysis, optimisation and AQE re-planning walks a
+    plan of a few KB instead of the whole extraction plan. Nothing is
+    pinned on the result; the checkpoint blocks are freed when the
+    returned frame is garbage-collected. Trade-off: local checkpoint
+    blocks live only in executor storage, so losing an executor that
+    holds one fails the job instead of recomputing the lost partition
+    (the same trade ``connected_components`` makes; the three frames
+    are narrow, O(edges) longs plus keys).
     """
+    # `e` feeds the degree, the weighted edges AND the derived node set;
+    # ew and nodes join back EVERY iteration. Checkpointing all three
+    # runs the caller's upstream once and cuts it out of every later
+    # plan (see the docstring).
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         (F.col(weight_col) if weight_col else F.lit(1)).cast("long").alias("w"),
-    )
-    derived_nodes = nodes is None
-    if derived_nodes:
+    ).localCheckpoint(eager=False)
+    if nodes is None:
         # node set from the UNFILTERED edges: a node whose edges all
         # carry weight <= 0 is still a node (it just moves no mass)
         nodes = e.select(F.col("src").alias("node")).union(
@@ -395,18 +418,13 @@ def pagerank_weighted(
         ).distinct()
     else:
         nodes = nodes.select(F.col(nodes.columns[0]).alias("node"))
+    nodes = nodes.localCheckpoint(eager=False)
     # non-positive / NULL weights carry no mass and would poison out_w
     # (an all-zero src divides by zero: NULL ranks in Spark, an error in
     # a SQL oracle) — drop them up front, one projection-level filter
     e = e.where(F.col("w") > 0)
     deg = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = e.join(deg, "src")  # (src, dst, w, out_w)
-    # pin the shared upstream: `e` feeds deg, ew AND the derived node
-    # set; ew and nodes join back EVERY iteration. Without these pins
-    # each iteration re-runs the caller's whole upstream (extraction,
-    # contraction, ...) once per reference — measured 4.3 s -> ~1 s on
-    # the host_crawl_rank entry. All three frames are narrow.
-    pin_frames = [e, ew] + ([nodes] if derived_nodes else [])
+    ew = e.join(deg, "src").localCheckpoint(eager=False)  # (src, dst, w, out_w)
     base = (100 - damping_pct) * 10_000
     ranks = nodes.select("node", F.lit(1_000_000).cast("long").alias("rank_micro"))
     for _ in range(iterations):
@@ -433,7 +451,4 @@ def pagerank_weighted(
                 .alias("rank_micro"),
             )
         )
-    out = ranks.select("node", "rank_micro")
-    for p in pin_frames:
-        out = _pin(p, out)
-    return out
+    return ranks.select("node", "rank_micro")

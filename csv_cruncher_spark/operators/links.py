@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.urls import url_host
+from ..functions.urls import _bare_host, url_host
 
 # group 1 = the href value; [^"'>] keeps the match inside the tag even
 # on unbalanced quotes. (?i) and the class syntax mean the same thing
@@ -209,9 +209,7 @@ def discovered_frontier(
     known = pages.select(F.col(url_col).alias("outlink")).distinct()
     new = links.select("outlink").distinct().join(known, "outlink", "left_anti")
     return (
-        new.withColumn(
-            "host", F.regexp_replace(url_host(F.col("outlink")), ":[0-9]+$", "")
-        )
+        new.withColumn("host", _bare_host(F.col("outlink")))
         .groupBy("host")
         .agg(F.count("*").alias("n_new_urls"))
     )
@@ -241,18 +239,20 @@ def contract_host_graph(
     signal. Rows whose url fails host extraction are dropped (counted
     nowhere; upstream `extract_outlinks` only emits resolvable urls).
 
-    Plan: host derivation is a projection (JVM ``try_parse_url``); ONE
-    shuffle on (src_host, dst_host) with partial aggregation map-side.
+    Plan: host derivation is a projection, ONE ``try_parse_url`` per
+    endpoint (`functions.urls._bare_host`). Keep it at one: Catalyst
+    pushes the host predicates below `extract_outlinks`' distinct and
+    inlines the whole href-resolution CASE into every host reference,
+    so a host rule of several parses grows the generated Filter past
+    the JVM's 64 KB method limit and the stage runs interpreted.
+    ONE shuffle on (src_host, dst_host) with partial aggregation map-side.
     The distinct-counts expand per-group state, not extra exchanges.
     Composes with `extract_outlinks` output, `MaintainedLinkGraph`
     state, or any (src url, dst url) frame.
     """
-    h = lambda c: F.regexp_replace(  # noqa: E731 — local column factory
-        url_host(F.col(c)), ":[0-9]+$", ""
-    )
     g = edges.select(
-        h(src_col).alias("src_host"),
-        h(dst_col).alias("dst_host"),
+        _bare_host(F.col(src_col)).alias("src_host"),
+        _bare_host(F.col(dst_col)).alias("dst_host"),
         F.col(src_col).alias("__s"),
         F.col(dst_col).alias("__d"),
     ).where(F.col("src_host").isNotNull() & F.col("dst_host").isNotNull())

@@ -94,6 +94,19 @@ def norm_expr(a: str) -> F.Column:
     return F.sqrt(dot_expr(a, a))
 
 
+def _finite(norm: F.Column) -> F.Column:
+    """True only for a finite norm (or product of norms); NULL for a
+    NULL one, so a filter drops it. A NaN element makes a norm NaN, a
+    ±Inf element (or squares past ~1e154) makes it +Inf; either gives
+    NaN cosines, which Spark orders above every real cosine. These are
+    the vectors the trained IVF path leaves unassigned at
+    :func:`ivf_assign` (every centroid distance NaN or +Inf).
+
+    One comparison, so the norm is evaluated once: norms are never
+    negative, and Spark orders NaN above +Inf."""
+    return norm < F.lit(float("inf"))
+
+
 def cosine_to_query(df: DataFrame, vec_col: str, query: list[float], out_col: str = "cosine") -> DataFrame:
     """Cosine similarity of every row's vector to a constant query vector.
     A zero-norm (or null) vector has no defined direction → null cosine,
@@ -435,11 +448,11 @@ def knn_join(
         # right id instead (uniform equi-join keys, same join shape and
         # the same one-cell-per-right-row pair-uniqueness argument); the
         # left side probes the constant full cell list. Null/zero-norm/
-        # mismatched vectors still never rank: they reach the join but
-        # their cosine is NULL (guarded denominator / fold fallback) and
-        # the isNotNull filter below drops them — the same rows the
-        # trained path drops at assignment time. Pinned against the
-        # trained path by test_knn_exact_fastpath_matches_trained.
+        # non-finite/mismatched vectors still never rank: they reach the
+        # join but their cosine is NULL (guarded denominator / fold
+        # fallback) and the isNotNull filter below drops them — the same
+        # rows the trained path drops at assignment time. Pinned against
+        # the trained path by test_knn_exact_fastpath_matches_trained.
         try:
             dim = _infer_dim(right, vec_r)
         except ValueError:
@@ -504,7 +517,12 @@ def knn_join(
     cand = l_probed.join(r_side, "__cell").filter(F.col("__il") != F.col("__ir"))
     dot = F.expr(_dot_unrolled("_lv", "_rv", dim))
     denom = F.col("__nl") * F.col("__nr")
-    sim = F.when(denom > 0, dot / denom)
+    # a NaN/±Inf vector has a non-finite norm and would score NaN, which
+    # ranks first: its pairs get a NULL cosine and drop below, in both
+    # modes (see _finite). Guarding the product, not filtering each side
+    # on its norm, keeps the norm kernel out of a pushed-down Filter that
+    # whole-stage codegen cannot compile (the fold fallback branch).
+    sim = F.when((denom > 0) & _finite(denom), dot / denom)
     # no pair-dedup needed: every right row lives in exactly ONE cell
     # (ivf_assign is a function of the vector), so a (left, right) pair
     # can only arise from that one cell — the join output is pair-unique
@@ -672,12 +690,10 @@ def ivf_topk(
         # change the output and the k-means training jobs are pure
         # overhead. Keep the trained path's row-exclusion semantics —
         # rows whose assignment would be NULL (null vector, wrong dim,
-        # NaN element → every centroid distance null/NaN → argmin -1)
-        # must still not reach the rerank, or a short corpus would emit
-        # null-cosine rows the trained path drops. Non-finite-but-NaN-free
-        # magnitudes (elements beyond ~1e154, ±Inf) are outside the
-        # contract either way: the trained path itself gives them
-        # centroid-dependent NaN cosines. Pinned by
+        # null/NaN/±Inf element → every centroid distance null, NaN or
+        # +Inf → argmin -1) must still not reach the rerank, or a short
+        # corpus would emit null-cosine rows and NaN cosines would rank
+        # first. Pinned by
         # test_ivf_topk_fullprobe_fastpath_matches_trained.
         try:
             dim = _infer_dim(df, vec_col)
@@ -686,9 +702,8 @@ def ivf_topk(
                 df.filter(F.lit(False)), id_col, vec_col, query, k=k
             )
         shard = df.filter(
-            F.col(vec_col).isNotNull()
-            & (F.size(vec_col) == dim)
-            & ~F.expr(f"exists({vec_col}, x -> isnull(x) or isnan(cast(x as double)))")
+            (F.size(vec_col) == dim)
+            & _finite(F.sqrt(F.expr(_sq_norm_unrolled(vec_col, dim))))
         )
         return brute_force_topk(shard, id_col, vec_col, query, k=k)
     if centroids is None:

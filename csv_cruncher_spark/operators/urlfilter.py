@@ -39,7 +39,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.urls import url_host
+from ..functions.urls import _bare_host
 
 # above this, a literal-array scan per row beats no one — callers with
 # big lists should pass a DataFrame (join path)
@@ -58,11 +58,6 @@ def host_suffixes(host: str | Column) -> Column:
         F.sequence(F.lit(1), n),
         lambda i: F.array_join(F.slice(parts, i, n - i + 1), "."),
     )
-
-
-def _bare_lower_host(url_col: str) -> Column:
-    # port-free host: a blocklist names domains, not ports
-    return F.regexp_replace(url_host(F.col(url_col)), ":[0-9]+$", "")
 
 
 def blocklist_filter(
@@ -88,7 +83,8 @@ def blocklist_filter(
     """
     if keep not in ("allowed", "blocked", "flag"):
         raise ValueError(f"keep must be allowed|blocked|flag, got {keep!r}")
-    host = _bare_lower_host(url_col)
+    # port-free host: a blocklist names domains, not ports
+    host = _bare_host(F.col(url_col))
     sfx = host_suffixes(host)
 
     if not isinstance(blocked_domains, DataFrame):

@@ -157,7 +157,7 @@ def test_contract_host_graph_weights_and_self_edges(spark):
             ("https://a.com/p2", "https://b.com/x"),
             # intra-host navigation, dropped by default
             ("https://a.com/p1", "https://a.com/p2"),
-            # port-variant of the same host merges (url_host strips :443)
+            # port-variant of the same host merges (the host is port-free)
             ("https://a.com:443/p3", "https://b.com/x"),
         ],
         ["url", "outlink"],
@@ -190,3 +190,90 @@ def test_contract_host_graph_single_shuffle_plan(spark):
     )
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
+
+
+# hostile spellings for the port-free host rule: ports (default, swapped
+# default, out of range, empty, non-numeric), userinfo, IPv6 literals,
+# case, trailing dots, relative / scheme-relative hrefs, non-http schemes
+HOSTILE_URLS = [
+    "http://Example.COM/a",
+    "https://example.com:443/a",
+    "http://h:443/x",
+    "http://h:80/",
+    "https://h:8443/p?q=1",
+    "http://h:0/",
+    "http://h:99999/",
+    "http://h:123456789012345/",
+    "http://h:/x",
+    "http://h:abc/",
+    "http://user:pw@Host.com:8080/x",
+    "https://user@host.com/",
+    "http://u:p@h:80/",
+    "http://[::1]/",
+    "http://[::1]:8080/x",
+    "https://[2001:DB8::1]:443/",
+    "http://[2001:db8::1]/",
+    "HTTP://WWW.EXAMPLE.COM./",
+    "https://Example.com.:8080/",
+    "//host.com/p",
+    "//host.com:81/p",
+    "/root/rel",
+    "dir/page.html",
+    "?q=1",
+    "#frag",
+    "mailto:a@b.com",
+    "javascript:void(0)",
+    "ftp://Files.Example.org:21/x",
+    "http://a.b.c:8080?x",
+    "http://exa mple.com/",
+    "",
+    None,
+]
+
+
+def test_bare_host_equals_port_stripped_url_host(spark):
+    """`functions.urls._bare_host` (one ``try_parse_url``) is the same
+    port-free lowercase host the link/urlfilter operators used to derive
+    as ``regexp_replace(url_host(c), ':[0-9]+$', '')`` (three parses, a
+    regex and a CASE) — on every hostile spelling above."""
+    from pyspark.sql import functions as F
+
+    from csv_cruncher_spark.functions.urls import _bare_host, url_host
+
+    df = spark.createDataFrame([(u,) for u in HOSTILE_URLS], "u STRING")
+    rows = df.select(
+        "u",
+        _bare_host(F.col("u")).alias("new"),
+        F.regexp_replace(url_host(F.col("u")), ":[0-9]+$", "").alias("old"),
+    ).collect()
+    assert len(rows) == len(HOSTILE_URLS)
+    assert [(r.u, r.new) for r in rows] == [(r.u, r.old) for r in rows]
+    got = {r.u: r.new for r in rows}
+    assert got["http://h:443/x"] == "h"
+    assert got["http://user:pw@Host.com:8080/x"] == "host.com"
+    assert got["http://[::1]:8080/x"] == "[::1]"
+    assert got["HTTP://WWW.EXAMPLE.COM./"] == "www.example.com."
+    assert got["mailto:a@b.com"] is None and got[""] is None
+
+
+def test_host_graph_entries_compile_without_codegen_fallback(spark):
+    """The host-graph entries stay inside whole-stage codegen: with
+    ``spark.sql.codegen.fallback=false`` a generated method over the
+    JVM's 64 KB limit raises instead of silently running interpreted
+    (a host rule of several ``try_parse_url`` calls, inlined with the
+    href-resolution CASE into a pushed-down Filter, does exceed it).
+    The setting is restored for the rest of the session."""
+    import __spark_entry__ as entries
+
+    sf_dir = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+    key = "spark.sql.codegen.fallback"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        for name in ("host_link_graph", "host_crawl_rank"):
+            assert entries.queries()[name](spark, sf_dir).collect(), name
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

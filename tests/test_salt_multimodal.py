@@ -364,8 +364,9 @@ def test_knn_exact_fastpath_matches_trained(spark):
     k-means training — the cell partitioning cannot change which pairs
     are compared (all of them, each exactly once), so hash-of-id cells
     must yield BIT-identical output to the trained-centroid path,
-    including the degenerate rows (null vector, zero norm, wrong dim)
-    the trained path drops at assignment time."""
+    including the degenerate rows (null vector, zero norm, wrong dim,
+    NaN / ±Inf element) the trained path drops at assignment time — a
+    NaN cosine would otherwise rank first for every left row."""
     import os as _os
 
     from csv_cruncher_spark.operators import similarity
@@ -375,11 +376,19 @@ def test_knn_exact_fastpath_matches_trained(spark):
         _os.path.join(sf_dir, "embeddings.parquet")
     ).select(F.col("vec_id").alias("id"), F.expr(
         "transform(embedding, x -> cast(x AS double))").alias("embedding"))
+    base = [float(x) for x in emb.orderBy("id").first()["embedding"]]
+
+    def poisoned(x):
+        return base[:3] + [x] + base[4:]
+
     degenerate = spark.createDataFrame(
         [
             (10_000_001, None),                # null vector
             (10_000_002, [0.0] * 64),          # zero norm
             (10_000_003, [1.0, 2.0]),          # wrong dim
+            (10_000_004, poisoned(float("nan"))),   # NaN element
+            (10_000_005, poisoned(float("inf"))),   # +Inf element
+            (10_000_006, poisoned(float("-inf"))),  # -Inf element
         ],
         "id: bigint, embedding: array<double>",
     )
@@ -405,16 +414,18 @@ def test_knn_exact_fastpath_matches_trained(spark):
     trained_m = {key(r): (r["id_r"], r["cosine"]) for r in trained}
     assert fast_m == trained_m and len(fast) == len(trained)
     # degenerate left/right ids never appear on either side of a pair
-    bad = {10_000_001, 10_000_002, 10_000_003}
+    bad = set(range(10_000_001, 10_000_007))
     assert not any(r["id_l"] in bad or r["id_r"] in bad for r in fast)
+    assert fast and all(r["cosine"] == r["cosine"] for r in fast)  # no NaN
 
 
 def test_ivf_topk_fullprobe_fastpath_matches_trained(spark):
     """Round-6 pin: ivf_topk's full-probe mode skips k-means training;
     output (including the exclusion of rows whose assignment would be
-    NULL — null / wrong-dim / NaN-element vectors) must be identical to
-    the trained path, here exercised on a corpus SHORTER than k so any
-    extra null-cosine row would be visible in the tail."""
+    NULL — null / wrong-dim / NaN-element / ±Inf-element vectors) must
+    be identical to the trained path, here exercised on a corpus SHORTER
+    than k so any extra null-cosine row would be visible in the tail and
+    a NaN cosine would sit at rank 1."""
     import math as _math
     import os as _os
 
@@ -427,13 +438,17 @@ def test_ivf_topk_fullprobe_fastpath_matches_trained(spark):
         "transform(embedding, x -> cast(x AS double))").alias("embedding"))
     first = emb.orderBy("vec_id").limit(1).collect()[0]
     q = [float(x) for x in first["embedding"]]
-    nan_vec = [float(x) for x in first["embedding"]]
-    nan_vec[3] = float(_math.nan)
+
+    def poisoned(x):
+        return q[:3] + [x] + q[4:]
+
     degenerate = spark.createDataFrame(
         [
-            (20_000_001, None),          # null vector
-            (20_000_002, [1.0, 2.0]),    # wrong dim
-            (20_000_003, nan_vec),       # NaN element
+            (20_000_001, None),                    # null vector
+            (20_000_002, [1.0, 2.0]),              # wrong dim
+            (20_000_003, poisoned(_math.nan)),     # NaN element
+            (20_000_004, poisoned(_math.inf)),     # +Inf element
+            (20_000_005, poisoned(-_math.inf)),    # -Inf element
         ],
         "vec_id: bigint, embedding: array<double>",
     )
